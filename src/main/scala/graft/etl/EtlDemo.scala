@@ -45,9 +45,14 @@ object EtlDemo {
 
     // advance the head, run an incremental cycle + an empty cycle
     ChainFixture.setHead(chain, ChainFixture.Epoch + ChainFixture.Span - 1)
-    val s2 = EtlJob.runCycle(spark, cfg)
+    // the incremental cycle runs through the loop, for its ops stats
+    val loop = new EtlLoop(spark, cfg, intervalSec = 0)
+    val s2 = loop.tick().getOrElse(sys.error(s"cycle2 failed: ${loop.lastError.get()}"))
     println(s"[etl-demo] cycle2 (incremental): blocks [${s2.startBlock},${s2.endBlock}] " +
       s"marketplace=${s2.marketplaceRows} dshop=${s2.dshopRows}")
+    val st = loop.stats
+    println(s"[etl-demo] loop stats: reject_rows=${st("reject_rows")} " +
+      s"last_cycle_s=${st("last_cycle_s")}")
     val s3 = EtlJob.runCycle(spark, cfg)
     println(s"[etl-demo] cycle3 (no new blocks): ran=${s3.ran}")
 

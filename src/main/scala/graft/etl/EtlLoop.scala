@@ -19,6 +19,9 @@ final class EtlLoop(spark: SparkSession, cfg: EtlJob.Config, intervalSec: Int = 
   val cycles = new AtomicLong(0)
   val marketplaceRows = new AtomicLong(0)
   val dshopRows = new AtomicLong(0)
+  val rejectRows = new AtomicLong(0)
+  /** Wall time of the last successful cycle, in nanoseconds. */
+  val lastCycleNanos = new AtomicLong(0)
   val errors = new AtomicLong(0)
   val lastError = new AtomicReference[String]("")
 
@@ -43,10 +46,13 @@ final class EtlLoop(spark: SparkSession, cfg: EtlJob.Config, intervalSec: Int = 
     * left unmoved (main.py:216-220). */
   def tick(): Option[EtlJob.CycleStats] =
     try {
+      val t0 = System.nanoTime()
       val s = EtlJob.runCycle(spark, cfg)
+      lastCycleNanos.set(System.nanoTime() - t0)
       cycles.incrementAndGet()
       marketplaceRows.addAndGet(s.marketplaceRows)
       dshopRows.addAndGet(s.dshopRows)
+      rejectRows.addAndGet(s.rejectRows)
       Some(s)
     } catch {
       case e: Exception =>
@@ -89,6 +95,8 @@ final class EtlLoop(spark: SparkSession, cfg: EtlJob.Config, intervalSec: Int = 
     "cycles" -> cycles.get().toString,
     "marketplace_rows" -> marketplaceRows.get().toString,
     "dshop_rows" -> dshopRows.get().toString,
+    "reject_rows" -> rejectRows.get().toString,
+    "last_cycle_s" -> (lastCycleNanos.get() / 1000000L / 1000.0).toString,
     "errors" -> errors.get().toString,
     "last_error" -> lastError.get())
 }

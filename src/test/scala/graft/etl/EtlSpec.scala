@@ -1,9 +1,15 @@
 package graft.etl
 
 import graft.SparkTestSession
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Behavioral tests for the ETL slice (SURVEY §5.2.3): confirmation lag,
   * empty short-circuit, incremental advance, at-least-once replay +
@@ -78,11 +84,89 @@ class EtlSpec extends AnyFunSuite {
   test("idempotent mode: replay does not duplicate (partition overwrite)") {
     val (root, cfg0) = freshDirs()
     val cfg = cfg0.copy(idempotent = true)
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     val s1 = EtlJob.runCycle(spark, cfg)
     Files.delete(root.resolve("cursor").resolve("etl_cursor.json"))
     EtlJob.runCycle(spark, cfg)
     val raw = spark.read.parquet(s"${cfg.sinkDir}/marketplace")
     assert(raw.count() == s1.marketplaceRows)
+    // dynamic overwrite is a write option: the shared session is untouched
+    assert(spark.conf.getOption(modeKey) == modeBefore)
+  }
+
+  test("one cycle reads the chain once and runs one execution per non-empty output") {
+    val (root, cfg) = freshDirs()
+    // one 1,000-block batch, the steady-state cycle: a range of several
+    // batches adds the range partitioner's sampling pass over the file
+    ChainFixture.setHead(root.resolve("chain"), ChainFixture.Epoch + 999 + 4)
+    val chainBytes = Files.size(root.resolve("chain").resolve("blocks.ndjson"))
+    // bytes of the stages that scan a file; re-reads of the cycle's
+    // cached batch also count as task input, but read no file
+    val fileBytes = new AtomicLong(0)
+    val executions = new AtomicInteger(0)
+    val stages = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          fileBytes.addAndGet(e.stageInfo.taskMetrics.inputMetrics.bytesRead)
+    }
+    val queries = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        executions.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        executions.incrementAndGet()
+    }
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(stages)
+    spark.listenerManager.register(queries)
+    try {
+      assert(EtlJob.runCycle(spark, cfg).ran)
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(stages)
+      spark.listenerManager.unregister(queries)
+    }
+    val nonEmpty = Seq("marketplace", "dshop", "rejects/marketplace", "rejects/dshop")
+      .count(t => Files.isDirectory(root.resolve("sink").resolve(t)))
+    assert(nonEmpty == 3) // the fixture plants no dshop rejects
+    assert(fileBytes.get() > 0 && fileBytes.get() < 2 * chainBytes,
+      s"read ${fileBytes.get()} B of files for a $chainBytes B chain")
+    assert(executions.get() == 1 + nonEmpty) // the count gate, then one per load
+  }
+
+  test("a failed load fails the cycle whole; the replay converges") {
+    val (root, cfg) = freshDirs()
+    val sink = root.resolve("sink")
+    Files.createDirectories(sink)
+    Files.write(sink.resolve("dshop"), Array[Byte](1)) // the dshop write cannot land
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](EtlJob.runCycle(spark, cfg))
+    assert(Cursor(cfg.cursorDir).read().isEmpty)
+    // the status tracker learns of job ends through the listener bus
+    ListenerBusAccess.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    // nor does a sibling load still in planning start a job afterwards
+    val lateJobs = new AtomicInteger(0)
+    val late = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = lateJobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(late)
+    try {
+      Thread.sleep(1000)
+      ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(late)
+    assert(lateJobs.get() == 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+    // the sibling loads may have landed; the replay duplicates them and
+    // the dedup view reads exact
+    Files.delete(sink.resolve("dshop"))
+    val s = EtlJob.runCycle(spark, cfg)
+    val end = ChainFixture.Epoch + ChainFixture.Span - 5
+    assert(s.ran && s.endBlock == end && Cursor(cfg.cursorDir).read().contains(end))
+    assert(EtlJob.dedupView(spark, s"${cfg.sinkDir}/marketplace", Schemas.marketplaceKey)
+      .count() == ChainFixture.expectedMarketplace(end)._1)
+    assert(EtlJob.dedupView(spark, s"${cfg.sinkDir}/dshop", Schemas.dshopKey)
+      .count() == ChainFixture.expectedDshopRows(end))
   }
 
   test("reject channel captures REQUIRED violations with full rows") {
@@ -127,6 +211,10 @@ class EtlSpec extends AnyFunSuite {
       assert(body.contains("\"cycles\":\"1\""))
       assert(body.contains("\"uptime_sec\""))
       assert(body.contains("\"errors\":\"0\""))
+      assert(body.contains("\"reject_rows\":\"" + loop.rejectRows.get() + "\""))
+      assert(loop.rejectRows.get() > 0)
+      assert(body.contains("\"last_cycle_s\""))
+      assert(loop.stats("last_cycle_s").toDouble > 0.0)
     } finally srv.stop()
     // reference main.py:268-274: handler errors surface as HTTP 500
     val broken = new StatsServer(() => throw new RuntimeException("boom"), port = 0).start()
